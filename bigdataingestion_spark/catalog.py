@@ -833,13 +833,14 @@ def streaming_cdc_latest_state(spark, sf_dir):
     """REAL streaming CDC upsert inside the gate: the events table staged
     as a 4-file change-log landing zone, streamed one file per micro-batch
     through foreachBatch MERGE (streaming.ingest.stream_cdc_upsert,
-    latest-wins by (ts, event_id)) into a parquet lake table; the final
-    lake state must equal the batch latest-state oracle — same output
+    latest-wins by (ts, event_id)) into a txlog table; the final
+    table state must equal the batch latest-state oracle — same output
     schema and oracle as ``events_latest_state``, proving the streaming
     merge converges to the batch answer regardless of micro-batch
     arrival order."""
     import tempfile
 
+    from bigdataingestion_spark.sinks.txlog import TxLogTable
     from bigdataingestion_spark.streaming.ingest import stream_cdc_upsert
 
     ev = _t(spark, sf_dir, "events").select(
@@ -858,7 +859,7 @@ def streaming_cdc_latest_state(spark, sf_dir):
         order_cols=["ts", "event_id"],
     )
     q.awaitTermination(300)
-    return spark.read.parquet(target).select(
+    return TxLogTable(target).read(spark).select(
         "user_id",
         F.col("ts").alias("last_ts"),
         F.col("event_id").alias("last_event_id"),

@@ -130,6 +130,27 @@ def shingle_table(
 _ordered_pairs = ordered_pairs
 
 
+def shingle_key_lanes() -> tuple[Column, Column]:
+    """The two 64-bit lanes of the 128-bit key shuffled in place of each
+    ``shingle`` string (r15, the duplicate_spans key policy): grouping and
+    joining only ever compare shingles for EQUALITY, so a 128-bit digest
+    is a drop-in key whose shuffle width is constant in shingle length —
+    at 100 TB the exchange carries 16 bytes/row where a 3-gram of real
+    words is 30-60+ bytes, and the aggregate compares two longs instead
+    of variable strings. Two xxhash64 lanes give the 128-bit width at a
+    fraction of md5's per-occurrence CPU (measured: md5 re-keying cost
+    ~12% wall at the 10x-density fixture; the xxhash pair is cheaper
+    than the string it replaces).
+
+    Spark's xxhash64 chains its seed through the arguments, so lane 2
+    hashes a constant FIRST: the seed it carries into the shingle bytes
+    is fixed and differs from lane 1's. Putting the constant last
+    (``xxhash64(shingle, 1)``) would make lane 2 ``XXH64(1, seed=lane
+    1)``, a function of lane 1, and every lane-1 collision a full-key
+    collision."""
+    return F.xxhash64("shingle"), F.xxhash64(F.lit(1), F.col("shingle"))
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     threshold: float = 0.5,
@@ -160,21 +181,9 @@ def ngram_jaccard_pairs(
     table (itself one explode+aggregate over the cached groups, cached —
     the r13 plan recomputed it once per join side).
     """
-    # shuffle a FLAT 16-byte hash of each shingle instead of the raw
-    # n-gram string (r15, the duplicate_spans key policy): grouping and
-    # joining only ever compare shingles for EQUALITY, so a 128-bit
-    # digest is a drop-in key whose shuffle width is constant in shingle
-    # length — at 100 TB the exchange carries 16 bytes/row where a
-    # 3-gram of real words is 30-60+ bytes, and the aggregate compares
-    # two longs instead of variable strings. Two seed-independent
-    # xxhash64 lanes give the 128-bit width at a fraction of md5's
-    # per-occurrence CPU (measured: md5 re-keying cost ~12% wall at the
-    # 10x-density fixture; the xxhash pair is cheaper than the string
-    # it replaces).
+    k1, k2 = shingle_key_lanes()
     sh = shingle_table(df, text_col, id_col, n, with_count=False).select(
-        F.col(id_col),
-        F.xxhash64("shingle").alias("_k1"),
-        F.xxhash64("shingle", F.lit(1)).alias("_k2"),
+        F.col(id_col), k1.alias("_k1"), k2.alias("_k2")
     )
     if max_shingle_df is None:
         # uncapped: a hot shingle's pair ARRAY would be unbounded; keep the

@@ -1,10 +1,12 @@
-"""SCD2 (slowly-changing-dimension type 2) history tracking over parquet.
+"""SCD2 (slowly-changing-dimension type 2) history tracking on a txlog table.
 
 CDC-style ingestion keeps full history: instead of updating a changed row in
-place (SCD1 = ``sinks.merge.merge_upsert``), the current version is closed
-out (``valid_to`` set) and a new version row opened. Delta implements this
-with MERGE; without table-format jars we emulate with joins + an atomic
-staging swap (same pattern as merge_upsert):
+place (SCD1 = ``TxLogTable.merge_upsert``), the current version is closed
+out (``valid_to`` set) and a new version row opened. The history lives in a
+``TxLogTable``; each snapshot is folded in with joins over the committed
+history and lands as ONE atomic overwrite commit — readers see the old or
+the new history, never a partial one, and a crash mid-apply leaves the
+previous version intact:
 
   * unchanged current rows            -> kept as-is
   * current rows whose source differs -> closed (valid_to = change ts)
@@ -17,12 +19,11 @@ full row content).
 
 from __future__ import annotations
 
-import os
-import shutil
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from bigdataingestion_spark.sinks.txlog import TxLogTable
+
 
 def _open_marker():
     # built lazily: Column construction needs an active SparkContext
@@ -55,14 +56,17 @@ def apply_scd2(
     """
     ts = F.lit(change_ts).cast("timestamp")
     src = _with_hash(source, tracked)
+    table = TxLogTable(target_path)
 
-    if not os.path.exists(target_path):
-        src.drop("_row_hash").withColumn("valid_from", ts).withColumn(
-            "valid_to", _open_marker()
-        ).write.parquet(target_path)
+    if table.snapshot() is None:
+        table.overwrite(
+            src.drop("_row_hash")
+            .withColumn("valid_from", ts)
+            .withColumn("valid_to", _open_marker())
+        )
         return
 
-    hist = spark.read.parquet(target_path)
+    hist = table.read(spark)
     closed = hist.filter(F.col("valid_to").isNotNull())
     current = _with_hash(hist.filter(F.col("valid_to").isNull()), tracked)
 
@@ -97,19 +101,18 @@ def apply_scd2(
         .withColumn("valid_to", _open_marker())
     )
 
-    merged = (
+    # the committed files are immutable, so the new history is staged
+    # straight from the snapshot it was read from and swapped in by one
+    # commit
+    table.overwrite(
         closed.unionByName(unchanged)
         .unionByName(closed_now)
         .unionByName(new_versions)
     )
-    staging = f"{target_path}.staging-{uuid.uuid4().hex[:8]}"
-    merged.write.parquet(staging)
-    backup = f"{target_path}.old-{uuid.uuid4().hex[:8]}"
-    os.rename(target_path, backup)
-    os.rename(staging, target_path)
-    shutil.rmtree(backup)
 
 
 def current_view(spark: SparkSession, target_path: str) -> DataFrame:
     """The SCD1 projection of the history: open rows only."""
-    return spark.read.parquet(target_path).filter(F.col("valid_to").isNull())
+    return (
+        TxLogTable(target_path).read(spark).filter(F.col("valid_to").isNull())
+    )

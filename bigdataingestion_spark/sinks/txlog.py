@@ -4,11 +4,13 @@ The reference writes Delta tables and relies on its transactional DML —
 ``format("delta")`` appends/overwrites with mergeSchema
 (``PostgresToDataLake_Ingestion_Notebook.py:302-306``) and MERGE-into-state
 (``:366-415``). delta-spark is uninstallable in this environment (COVERAGE
-deviation #7), so elsewhere this repo maps 'delta' to plain parquet and
-hand-rolls MERGE semantics (``sinks/merge.py``). That stand-in preserves
-RESULTS but not the transactional properties: a crashed overwrite can leave
-a half-written table, a replayed micro-batch double-appends, and readers
-racing a writer see partial data.
+deviation #7), so the plain writer path (``sinks/writer.py``) maps 'delta'
+to plain parquet. That stand-in preserves RESULTS but not the
+transactional properties: a crashed overwrite can leave a half-written
+table, a replayed micro-batch double-appends, and readers racing a writer
+see partial data. Every data-level DML and layout-maintenance operation
+(MERGE, SCD2, OPTIMIZE/Z-order, the streaming CDC and quality-gate sinks)
+therefore runs on this log only.
 
 ``TxLogTable`` closes exactly that gap with the same architecture the open
 Delta Lake protocol uses (ordered JSON commit log + immutable data files),
@@ -3682,9 +3684,12 @@ class TxLogTable:
     ) -> int:
         """Copy-on-write MERGE INTO with FILE-LEVEL PRUNING: source-wins
         upsert by ``keys``, or latest-wins by ``order_cols`` when
-        deliveries may be out of order (the two MERGE shapes in
-        ``sinks/merge.py``, committed atomically). Only keys present in
-        the source are affected — like Delta's MERGE, this never dedups
+        deliveries may be out of order, committed atomically. Works on
+        flat and hive-partitioned tables: rewritten rows re-stage into
+        their partition dirs and source rows land where their values
+        dictate, so a key whose partition value changed moves (its old
+        file is touched by the finding pass like any match). Only keys
+        present in the source are affected — like Delta's MERGE, this never dedups
         pre-existing duplicate keys the source doesn't mention, in ANY
         mode (a whole-table dedup side effect would also be
         layout-dependent under pruning: duplicates split across
@@ -3705,7 +3710,7 @@ class TxLogTable:
         snap = self.snapshot()
         if txn_id is not None and snap and txn_id in snap.txn_ids:
             return snap.version
-        self._require_flat(snap)
+        pcols = list(snap.partition_cols) if snap else []
         if snap is not None and _identity_of(
             StructType.fromJson(json.loads(snap.schema_json))
         ):
@@ -3817,7 +3822,9 @@ class TxLogTable:
                     hit_rows if (snap is not None and snap.files) else None,
                     merged,
                 )
-            files, fstats = self._stage_files(merged, write_schema=schema)
+            files, fstats = self._stage_files(
+                merged, pcols or None, write_schema=schema
+            )
         finally:
             if ours:
                 cached.unpersist()
@@ -3848,6 +3855,7 @@ class TxLogTable:
             "merge",
             txn_id,
             snap,
+            partition_cols=pcols or None,
             read_check=read_check,
             precomputed_stats=fstats,
             cdf=cdf_map,
@@ -4015,7 +4023,7 @@ class TxLogTable:
                 f"{self.path} has no commits; MERGE needs an existing "
                 "table schema — create the table first"
             )
-        # hive-partitioned tables merge too (unlike merge_upsert):
+        # hive-partitioned tables merge too (as in merge_upsert):
         # rewritten rows re-stage into their partition dirs, inserted
         # rows land in the dirs their source values dictate. Partition
         # columns carry no footer stats, so key pruning on them is scan
@@ -6419,8 +6427,7 @@ class TxLogTable:
         ``zorder_by``, which is a GLOBAL clustering and implies it)
         rewrites every file.
 
-        Unlike ``sinks.compact.compact_path`` (directory swap — the plain
-        parquet path), this goes through the commit protocol: a concurrent
+        This goes through the commit protocol: a concurrent
         APPEND that lands first simply serializes before the compaction
         (the rewrite re-commits at the next version, the appended files
         carry through untouched — compaction never clobbers a commit it

@@ -408,61 +408,25 @@ def stream_cdc_upsert(
     order_cols: list[str],
     fmt: str = "parquet",
     max_files_per_trigger: int = 1,
+    app_id: str | None = None,
 ) -> StreamingQuery:
-    """Streaming CDC -> lake upsert: each micro-batch MERGEs into the
-    target with latest-wins-by-``order_cols`` semantics (foreachBatch +
-    ``sinks.merge.merge_upsert_ordered``).
+    """Streaming CDC -> txlog upsert: each micro-batch is ONE atomic
+    ``TxLogTable.merge_upsert`` commit, latest-wins by ``order_cols``,
+    under a per-batch txn id.
 
     This is the streaming analogue of the reference's scheduled
     MERGE-into-state pattern (ING:373-415): a change stream keyed by
     ``keys`` converges to exactly the newest version of every key. The
     ordered merge makes the result independent of micro-batch arrival
-    order (a batch carrying an older version cannot regress a key) and
-    idempotent under redelivery — together with the checkpointed file
-    source that upgrades at-least-once delivery to an effectively-once
-    lake state. ``max_files_per_trigger=1`` deliberately exercises the
-    multi-batch path; raise it in production to amortize merge rewrites.
-    """
-    from bigdataingestion_spark.sinks.merge import merge_upsert_ordered
-
-    probe, stream = _open_file_stream(spark, source_dir, fmt, max_files_per_trigger)
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        merge_upsert_ordered(spark, target_dir, batch_df, keys, order_cols)
-
-    return (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def stream_cdc_upsert_txlog(
-    spark: SparkSession,
-    source_dir: str,
-    target_dir: str,
-    checkpoint_dir: str,
-    keys: list[str],
-    order_cols: list[str],
-    fmt: str = "parquet",
-    max_files_per_trigger: int = 1,
-    app_id: str | None = None,
-) -> StreamingQuery:
-    """``stream_cdc_upsert`` on a txlog table: each micro-batch is ONE
-    atomic ``TxLogTable.merge_upsert`` commit under a per-batch txn id.
-
-    Two upgrades over the plain-parquet CDC merge: readers racing a
-    merge see the old or the new snapshot, never a half-written
-    directory (the merge rewrite + swap is a single commit), and a
-    redelivered batch is a true NO-OP via the txn log — the plain path
-    is merely CONVERGENT under replay (latest-wins re-merge), which
-    re-pays the rewrite and relies on ``order_cols`` correctness. The
-    txn scope hashes the checkpoint's absolute path (same rule as
-    ``stream_txlog_ingest``); deleting the checkpoint to reprocess
-    requires a fresh ``app_id``."""
+    order (a batch carrying an older version cannot regress a key);
+    readers racing a merge see the old or the new snapshot, never a
+    half-written table; and a redelivered batch is a true NO-OP via the
+    txn log, which upgrades the checkpointed file source's at-least-once
+    delivery to exactly-once table state. The txn scope hashes the
+    checkpoint's absolute path (same rule as ``stream_txlog_ingest``);
+    deleting the checkpoint to reprocess requires a fresh ``app_id``.
+    ``max_files_per_trigger=1`` deliberately exercises the multi-batch
+    path; raise it in production to amortize merge rewrites."""
     from bigdataingestion_spark.sinks.txlog import TxLogTable
 
     probe, stream = _open_file_stream(spark, source_dir, fmt, max_files_per_trigger)
@@ -505,7 +469,7 @@ def stream_cdc_apply_ops(
     - ``WHEN MATCHED                 -> UPDATE SET *``
     - ``WHEN NOT MATCHED AND op <> 'D' -> INSERT *``
 
-    — the canonical CDC-apply shape ``stream_cdc_upsert_txlog`` cannot
+    — the canonical CDC-apply shape ``stream_cdc_upsert`` cannot
     express (its latest-wins merge has no delete path; tombstones there
     need a second ``delete_matching`` commit, losing batch atomicity).
     SET */INSERT * map only source∩table columns, so the op column
@@ -618,10 +582,10 @@ def stream_txlog_ingest(
     The native file sink solves this with its manifest log but supports
     only a single plain file sink; merge/multi-sink topologies
     (``stream_cdc_upsert``, the dead-letter gate) need idempotency in the
-    SINK. This is the canonical third pattern, Delta's ``txn``
-    (appId, version) contract re-expressed on ``sinks.txlog``: each batch
-    appends with ``txn_id=f"{app_id}:{batch_id}"`` and the table's log
-    makes a replayed id a no-op — redelivery cannot duplicate rows no
+    SINK. All of them use Delta's ``txn`` (appId, version) contract
+    re-expressed on ``sinks.txlog``; here each batch appends with
+    ``txn_id=f"{app_id}:{batch_id}"`` and the table's log makes a
+    replayed id a no-op — redelivery cannot duplicate rows no
     matter when the writer crashed, without rewriting any existing data
     (unlike the CDC merge, which pays a copy-on-write per batch for the
     same guarantee).

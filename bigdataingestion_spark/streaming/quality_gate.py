@@ -6,7 +6,7 @@ a 24/7 stream cannot stop to triage, so the production pattern is a
 dead-letter queue: every micro-batch is split by the SAME declarative
 expectations the batch gate uses (``pipeline.quality.Expectation``), clean
 rows append to the lake, violating rows append — WITH the rule names that
-rejected them — to a quarantine directory for replay after the upstream fix.
+rejected them — to a quarantine table for replay after the upstream fix.
 
 Scale shape: the expectations compose into one boolean column evaluated in
 whole-stage codegen; the batch is cached once per trigger (two outputs, one
@@ -15,11 +15,11 @@ cannot have two file sinks.
 
 Exactly-once: ``foreachBatch`` alone is at-least-once — if the quarantine
 write fails after the clean write succeeded, restart replays the whole
-batch. Both sinks therefore write to a ``batch_id={id}``-suffixed
-directory in OVERWRITE mode: a replay of batch N rewrites exactly batch
-N's directory instead of appending duplicates, making the pair of writes
-idempotent without a transaction. Readers see ``batch_id`` as an ordinary
-discovered partition column.
+batch. Both sinks are therefore txlog tables and each half appends as ONE
+atomic commit under the txn id ``f"{scope}:{batch_id}"``: on a replay the
+already-committed side no-ops on its txn id and the other side commits,
+so each sink holds every batch exactly once. Readers get snapshot
+isolation and time travel over the gate output.
 """
 
 from __future__ import annotations
@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from bigdataingestion_spark.pipeline.quality import Expectation
+from bigdataingestion_spark.sinks.txlog import TxLogTable
 
 
 def _violation_labels(expectations: list[Expectation]):
@@ -47,110 +48,17 @@ def _violation_labels(expectations: list[Expectation]):
 def gate_batch(
     batch_df: DataFrame,
     batch_id: int,
-    target_dir: str,
-    quarantine_dir: str,
-    expectations: list[Expectation],
-    fmt: str = "parquet",
-) -> None:
-    """Split one micro-batch and write both halves idempotently.
-
-    Module-level (not a closure) so the replay contract is directly
-    testable: calling this twice with the same ``batch_id`` must leave the
-    same rows on disk as calling it once.
-    """
-    if batch_df.isEmpty():
-        return
-    tagged = batch_df.withColumn(
-        "_violations", _violation_labels(expectations)
-    ).cache()
-    try:
-        clean = tagged.filter(F.size("_violations") == 0).drop("_violations")
-        bad = tagged.filter(F.size("_violations") > 0).withColumn(
-            "_violations", F.concat_ws(",", "_violations")
-        )
-        clean.write.mode("overwrite").format(fmt).save(
-            f"{target_dir}/batch_id={batch_id}"
-        )
-        bad.write.mode("overwrite").format(fmt).save(
-            f"{quarantine_dir}/batch_id={batch_id}"
-        )
-    finally:
-        tagged.unpersist()
-
-
-def _refuse_legacy_layout(path: str) -> None:
-    """The ``batch_id={id}`` sink layout cannot extend a directory written
-    by the old append-mode gate (pre-r5): root-level data files mixed with
-    hive partition dirs make Spark's partition discovery fail, and readers
-    would suddenly see a new ``batch_id`` column. Refuse up front with the
-    migration step instead of failing obscurely downstream."""
-    import os
-
-    if not os.path.isdir(path):
-        return
-    root_files = [
-        f
-        for f in os.listdir(path)
-        if os.path.isfile(os.path.join(path, f))
-        and not f.startswith((".", "_"))  # _SUCCESS etc. are harmless
-    ]
-    if root_files:
-        raise ValueError(
-            f"{path} holds root-level data files from the legacy append-mode "
-            f"gate layout (e.g. {root_files[0]}); the gate now writes "
-            "batch_id={id} subdirectories and the two layouts cannot mix. "
-            "Point the gate at a fresh directory (or move the legacy files "
-            "into it as a one-off batch_id=legacy subdirectory)."
-        )
-
-
-def stream_quality_gate(
-    spark: SparkSession,
-    source_dir: str,
-    target_dir: str,
-    quarantine_dir: str,
-    checkpoint_dir: str,
-    expectations: list[Expectation],
-    fmt: str = "parquet",
-    max_files_per_trigger: int = 64,
-) -> StreamingQuery:
-    """File-landing-zone -> (lake, dead-letter) streaming split.
-
-    Sinks write ``batch_id={id}`` subdirectories (idempotent per-batch
-    overwrite). Upgrading from the pre-batch_id append layout requires a
-    fresh target/quarantine dir — mixed layouts are refused at start."""
-    from bigdataingestion_spark.streaming.ingest import _open_file_stream
-
-    _refuse_legacy_layout(target_dir)
-    _refuse_legacy_layout(quarantine_dir)
-    _probe, stream = _open_file_stream(spark, source_dir, fmt, max_files_per_trigger)
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        gate_batch(batch_df, batch_id, target_dir, quarantine_dir, expectations, fmt)
-
-    return (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def gate_batch_txlog(
-    batch_df: DataFrame,
-    batch_id: int,
-    target: "TxLogTable",
-    quarantine: "TxLogTable",
+    target: TxLogTable,
+    quarantine: TxLogTable,
     expectations: list[Expectation],
     scope: str,
 ) -> None:
-    """One micro-batch through txlog sinks: clean rows append to
-    ``target``, rule-tagged violations to ``quarantine``, each as ONE
-    atomic commit under ``txn_id=f"{scope}:{batch_id}"``. A crash between
-    the two appends replays the batch; the already-committed side no-ops
-    on its txn id and the other side commits — exactly-once per sink
-    with no layout convention (this is what the batch_id={id} directory
-    scheme of ``gate_batch`` simulates without a log). Module-level so
-    the replay contract is directly testable."""
+    """Split one micro-batch: clean rows append to ``target``, rule-tagged
+    violations to ``quarantine``, each as ONE atomic commit under
+    ``txn_id=f"{scope}:{batch_id}"``. Module-level (not a closure) so the
+    replay contract is directly testable: calling this twice with the same
+    ``batch_id`` must leave the same rows in both tables as calling it
+    once."""
     if batch_df.isEmpty():
         return
     tagged = batch_df.withColumn(
@@ -170,7 +78,7 @@ def gate_batch_txlog(
         tagged.unpersist()
 
 
-def stream_quality_gate_txlog(
+def stream_quality_gate(
     spark: SparkSession,
     source_dir: str,
     target_dir: str,
@@ -181,14 +89,10 @@ def stream_quality_gate_txlog(
     max_files_per_trigger: int = 64,
     app_id: str | None = None,
 ) -> StreamingQuery:
-    """``stream_quality_gate`` with txlog sinks: atomic per-batch
-    commits, txn-id exactly-once on BOTH the lake and the quarantine,
-    snapshot-isolated readers, and time travel over gate output — no
-    ``batch_id={id}`` directory convention, no legacy-layout refusal
-    needed. The txn scope hashes the checkpoint's absolute path (the
-    ``stream_txlog_ingest`` rule); deleting the checkpoint to reprocess
-    requires a fresh ``app_id``."""
-    from bigdataingestion_spark.sinks.txlog import TxLogTable
+    """File-landing-zone -> (lake, dead-letter) streaming split into two
+    txlog tables. The txn scope hashes the checkpoint's absolute path
+    (the ``stream_txlog_ingest`` rule); deleting the checkpoint to
+    reprocess requires a fresh ``app_id``."""
     from bigdataingestion_spark.streaming.ingest import (
         _open_file_stream,
         path_txn_scope,
@@ -200,9 +104,7 @@ def stream_quality_gate_txlog(
     scope = app_id or path_txn_scope(checkpoint_dir)
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        gate_batch_txlog(
-            batch_df, batch_id, target, quarantine, expectations, scope
-        )
+        gate_batch(batch_df, batch_id, target, quarantine, expectations, scope)
 
     return (
         stream.writeStream.foreachBatch(apply_batch)

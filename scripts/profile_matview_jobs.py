@@ -1,13 +1,14 @@
 """Per-phase job-count + wall profile of the matview gate queries.
 
-Usage: python /tmp/profile_mv.py [additive|minmax|median|join|topk]
+Usage: python scripts/profile_matview_jobs.py [additive|minmax]
 """
 import os
 import sys
 import tempfile
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from pyspark.sql import functions as F
 
@@ -51,7 +52,10 @@ class phase:
         return False
 
 
+MODES = ("additive", "minmax")
 which = sys.argv[1] if len(sys.argv) > 1 else "minmax"
+if which not in MODES:
+    sys.exit(f"unknown mode {which!r}; expected one of {', '.join(MODES)}")
 
 orders = _t("orders").select("o_orderkey", "o_orderstatus", "o_totalprice")
 k = F.col("o_orderkey")
@@ -125,8 +129,3 @@ print(f"\n=== {which}: per-phase jobs / wall ===")
 for name, jobs, wall in PHASE_STATS:
     print(f"{name:24s} jobs={jobs:3d} wall={wall:7.3f}s")
 print(f"{'TOTAL':24s} jobs={total_jobs:3d} wall={total_wall:7.3f}s")
-
-# dump per-job stage callsites for the refresh phases
-print("\n=== job breakdown (refresh phases) ===")
-for name, jobs, wall in []:
-    pass

@@ -73,6 +73,22 @@ def pytest_collection_modifyitems(config, items):
             item.add_marker(pytest.mark.slow)
 
 
+def pytest_terminal_summary(terminalreporter, exitstatus, config):
+    """Say how many slow-tier tests the run left out, so a green
+    fast-tier-only run is never mistaken for a full-tier one."""
+    slow = [
+        item
+        for item in terminalreporter.stats.get("deselected", [])
+        if item.get_closest_marker("slow") is not None
+    ]
+    if slow:
+        terminalreporter.write_line(
+            f"{len(slow)} slow-tier tests deselected (fast tier only); "
+            'full tier: python -m pytest tests/ -q -m "slow or not slow"',
+            yellow=True,
+        )
+
+
 TESTDATA = os.environ.get("SPARK_GRAFT_TESTDATA", "/root/testdata")
 SF_SMOKE = os.path.join(TESTDATA, "sf0.001")
 SF_CORRECT = os.path.join(TESTDATA, "sf0.01")

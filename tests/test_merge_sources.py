@@ -1,46 +1,52 @@
-"""Data-level merge upsert + non-parquet file sources."""
+"""Data-level merge upsert on the txlog + non-parquet file sources."""
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import functions as F
-
-from bigdataingestion_spark.sinks.merge import merge_upsert
+from bigdataingestion_spark.sinks.txlog import TxLogTable
 from bigdataingestion_spark.sources.files import FileSource
 from bigdataingestion_spark.sources.querygen import resolve_table
 
 
 def test_merge_upsert_updates_and_inserts(spark, tmp_path):
-    path = str(tmp_path / "tbl")
+    t = TxLogTable(str(tmp_path / "tbl"))
     base = spark.createDataFrame(
         [(1, "a", 10), (2, "b", 20), (3, "c", 30)], ["id", "name", "v"]
     )
-    assert merge_upsert(spark, path, base, keys=["id"]) == 3
+    t.merge_upsert(spark, base, keys=["id"])
+    assert t.read(spark).count() == 3
     src = spark.createDataFrame([(2, "B", 99), (4, "d", 40)], ["id", "name", "v"])
-    assert merge_upsert(spark, path, src, keys=["id"]) == 4
-    out = {r.id: (r.name, r.v) for r in spark.read.parquet(path).collect()}
+    t.merge_upsert(spark, src, keys=["id"])
+    out = {r.id: (r.name, r.v) for r in t.read(spark).collect()}
     assert out == {1: ("a", 10), 2: ("B", 99), 3: ("c", 30), 4: ("d", 40)}
 
 
 def test_merge_upsert_idempotent(spark, tmp_path):
-    path = str(tmp_path / "tbl2")
+    t = TxLogTable(str(tmp_path / "tbl2"))
     base = spark.createDataFrame([(1, 10), (2, 20)], ["id", "v"])
-    merge_upsert(spark, path, base, keys=["id"])
-    merge_upsert(spark, path, base, keys=["id"])  # same source again
-    assert spark.read.parquet(path).count() == 2
+    t.merge_upsert(spark, base, keys=["id"])
+    t.merge_upsert(spark, base, keys=["id"])  # same source again
+    assert sorted(map(tuple, t.read(spark).collect())) == [(1, 10), (2, 20)]
+    # the same batch under a txn id already in the log is a no-op commit
+    v = t.merge_upsert(spark, base, keys=["id"], txn_id="batch:0")
+    assert t.merge_upsert(spark, base, keys=["id"], txn_id="batch:0") == v
+    assert t.version() == v
 
 
-def test_merge_upsert_partition_filter_preserves_outside(spark, tmp_path):
-    path = str(tmp_path / "tbl3")
+def test_merge_upsert_partitioned_carries_untouched_partition(spark, tmp_path):
+    t = TxLogTable(str(tmp_path / "tbl3"))
     base = spark.createDataFrame(
         [(1, 2023, 10), (2, 2024, 20), (3, 2024, 30)], ["id", "year", "v"]
     )
-    merge_upsert(spark, path, base, keys=["id"])
+    t.overwrite_partitions(base, ["year"])
+    old_2023 = [f for f in t.snapshot().files if "year=2023" in f]
     src = spark.createDataFrame([(2, 2024, 99)], ["id", "year", "v"])
-    merge_upsert(spark, path, src, keys=["id"], partition_filter=F.col("year") == 2024)
-    out = {r.id: r.v for r in spark.read.parquet(path).collect()}
-    assert out == {1: 10, 2: 99, 3: 30}
+    t.merge_upsert(spark, src, keys=["id"])
+    out = {r.id: (r.year, r.v) for r in t.read(spark).collect()}
+    assert out == {1: (2023, 10), 2: (2024, 99), 3: (2024, 30)}
+    # file pruning: the partition the source never touches is carried by
+    # reference, not rewritten
+    assert old_2023 and set(old_2023) <= set(t.snapshot().files)
+    assert t.history()[-1]["op_metrics"]["files_carried"] >= len(old_2023)
 
 
 def test_csv_and_json_file_sources(spark, tmp_path):

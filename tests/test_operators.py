@@ -45,6 +45,26 @@ def test_ngram_jaccard_identical_is_one(docs):
     assert (1, 4) not in pairs
 
 
+def test_ngram_key_lanes_are_independent(spark, sf_smoke_dir):
+    """The shingle key's second lane must not be a function of the first:
+    with the constant hashed LAST, Spark's seed chaining makes lane 2 ==
+    XXH64.hashInt(1, seed=lane 1), so a lane-1 collision is a full
+    128-bit key collision."""
+    docs = spark.read.parquet(f"{sf_smoke_dir}/documents.parquet")
+    k1, k2 = dedup.shingle_key_lanes()
+    rows = (
+        dedup.shingle_table(docs, "text", "doc_id", 3)
+        .select(k1.alias("k1"), k2.alias("k2"))
+        .limit(200)
+        .collect()
+    )
+    # XXH64(seed).hashInt(1) is XXH64.hashInt(1, seed); the static form
+    # is not reliably resolvable through py4j once jobs have run
+    xxh64 = spark._jvm.org.apache.spark.sql.catalyst.expressions.XXH64
+    assert len(rows) == 200
+    assert all(r.k2 != xxh64(r.k1).hashInt(1) for r in rows)
+
+
 def test_ngram_jaccard_hot_shingle_cap_bounds_pairs(spark):
     # 40 docs share ONE boilerplate shingle ("standard legal disclaimer")
     # but are otherwise unique -> uncapped, that shingle alone generates

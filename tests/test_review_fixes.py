@@ -2,11 +2,9 @@
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from bigdataingestion_spark.config.crypto import decrypt_value, encrypt_value
-from bigdataingestion_spark.sinks.merge import merge_upsert
 from bigdataingestion_spark.sinks.scd2 import apply_scd2, current_view
+from bigdataingestion_spark.sinks.txlog import TxLogTable
 from bigdataingestion_spark.sources.jdbc import JdbcSource
 from bigdataingestion_spark.sources.querygen import resolve_table
 
@@ -28,27 +26,28 @@ def test_scd2_null_shift_detected(spark, tmp_path):
     v2 = spark.createDataFrame([(1, None, "x")], "id int, a string, b string")
     apply_scd2(spark, path, v2, keys=["id"], tracked=["a", "b"],
                change_ts="2024-02-01 00:00:00")
-    hist = spark.read.parquet(path)
+    hist = TxLogTable(path).read(spark)
     assert hist.count() == 2  # closed old version + open new version
     cur = current_view(spark, path).collect()
     assert len(cur) == 1 and cur[0].a is None and cur[0].b == "x"
 
 
 def test_merge_upsert_key_moving_partitions_no_duplicate(spark, tmp_path):
-    path = str(tmp_path / "tbl")
+    t = TxLogTable(str(tmp_path / "tbl"))
     base = spark.createDataFrame(
         [(1, 2023, 10), (2, 2024, 20)], ["id", "year", "v"]
     )
-    merge_upsert(spark, path, base, keys=["id"])
-    # key 1 moves from year 2023 (outside the filter) to 2024
+    t.overwrite_partitions(base, ["year"])
+    # key 1 moves from the year=2023 partition to year=2024
     src = spark.createDataFrame([(1, 2024, 99)], ["id", "year", "v"])
-    merge_upsert(spark, path, src, keys=["id"], partition_filter=F.col("year") == 2024)
-    out = spark.read.parquet(path)
+    t.merge_upsert(spark, src, keys=["id"])
+    out = t.read(spark)
     assert out.count() == 2
     assert {r.id: (r.year, r.v) for r in out.collect()} == {
         1: (2024, 99),
         2: (2024, 20),
     }
+    assert t.snapshot().partition_cols == ("year",)
 
 
 def test_jdbc_partitioned_read_empty_increment_no_crash(spark, tmp_path):
@@ -94,41 +93,3 @@ def test_fingerprint_compare_tristate(tmp_path, monkeypatch):
     base.write_text(json.dumps({"sf_dir": "/sf0.1", "plans": {"q": "abc"}}))
     assert fp.compare({"q": "abc"}, "/sf0.1") == (True, [])
     assert fp.compare({"q": "zzz"}, "/sf0.1") == (False, ["q"])
-
-
-def test_quality_gate_refuses_legacy_append_layout(spark, tmp_path):
-    """ADVICE r5: the batch_id={id} sink layout cannot extend a directory
-    written by the old append-mode gate; refuse at start with an
-    actionable error instead of failing in partition discovery."""
-    import pytest
-
-    from bigdataingestion_spark.pipeline.quality import Expectation
-    from bigdataingestion_spark.streaming.quality_gate import stream_quality_gate
-
-    landing = tmp_path / "landing"
-    spark.createDataFrame([(1,)], ["id"]).coalesce(1).write.parquet(str(landing))
-    legacy_target = tmp_path / "target"
-    # legacy layout: data files at the dir root, no batch_id= subdirs
-    spark.createDataFrame([(0,)], ["id"]).coalesce(1).write.parquet(
-        str(legacy_target)
-    )
-    with pytest.raises(ValueError, match="legacy append-mode"):
-        stream_quality_gate(
-            spark,
-            str(landing),
-            str(legacy_target),
-            str(tmp_path / "quarantine"),
-            str(tmp_path / "ckpt"),
-            [Expectation("pos", F.col("id") > 0)],
-        )
-    # a batch_id-layout dir (or a fresh one) is accepted
-    q = stream_quality_gate(
-        spark,
-        str(landing),
-        str(tmp_path / "target2"),
-        str(tmp_path / "quarantine"),
-        str(tmp_path / "ckpt2"),
-        [Expectation("pos", F.col("id") > 0)],
-    )
-    q.awaitTermination(120)
-    assert spark.read.parquet(str(tmp_path / "target2")).count() == 1

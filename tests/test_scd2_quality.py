@@ -12,6 +12,7 @@ from bigdataingestion_spark.pipeline.quality import (
     expect_unique,
 )
 from bigdataingestion_spark.sinks.scd2 import apply_scd2, current_view
+from bigdataingestion_spark.sinks.txlog import TxLogTable
 
 
 def test_scd2_lifecycle(spark, tmp_path):
@@ -31,7 +32,7 @@ def test_scd2_lifecycle(spark, tmp_path):
     )
     apply_scd2(spark, path, v2, keys=["id"], tracked=["name", "city"],
                change_ts="2024-02-01 00:00:00")
-    hist = spark.read.parquet(path)
+    hist = TxLogTable(path).read(spark)
     assert hist.count() == 4  # alice open, bob closed + bob open, carol open
     cur = {r.id: r.city for r in current_view(spark, path).collect()}
     assert cur == {1: "NY", 2: "SF", 3: "TX"}
@@ -51,10 +52,12 @@ def test_scd2_lifecycle(spark, tmp_path):
     cur = {r.id for r in current_view(spark, path).collect()}
     assert cur == {1, 3}
     # idempotency: same snapshot again changes nothing
-    before = spark.read.parquet(path).count()
+    before = TxLogTable(path).read(spark).count()
     apply_scd2(spark, path, v3, keys=["id"], tracked=["name", "city"],
                change_ts="2024-03-02 00:00:00")
-    assert spark.read.parquet(path).count() == before
+    assert TxLogTable(path).read(spark).count() == before
+    # every apply is one atomic commit of the whole new history
+    assert [h["op"] for h in TxLogTable(path).history()] == ["overwrite"] * 4
 
 
 def test_orchestrator_quality_gate_isolates_failing_table(spark, tmp_path, sf_smoke_dir):

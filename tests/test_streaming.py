@@ -120,8 +120,11 @@ def test_stream_static_enrich_matches_batch(spark, tmp_path, landing, sf_smoke_d
 
 def test_stream_cdc_upsert_converges_out_of_order(spark, tmp_path):
     """foreachBatch ordered merge: newest version per key wins even when
-    micro-batches deliver versions out of time order, and redelivery is
-    idempotent."""
+    micro-batches deliver versions out of time order, each batch is one
+    merge commit, and redelivery is a no-op."""
+    import shutil
+
+    from bigdataingestion_spark.sinks.txlog import TxLogTable
     from bigdataingestion_spark.streaming.ingest import stream_cdc_upsert
 
     src = tmp_path / "cdc_src"
@@ -139,29 +142,41 @@ def test_stream_cdc_upsert_converges_out_of_order(spark, tmp_path):
     )
     v2.coalesce(1).write.parquet(str(src))
     v1.coalesce(1).write.mode("append").parquet(str(src))
-    target = str(tmp_path / "cdc_state")
+    target, ckpt = str(tmp_path / "cdc_state"), str(tmp_path / "cdc_ckpt")
     q = stream_cdc_upsert(
         spark,
         str(src),
         target,
-        str(tmp_path / "cdc_ckpt"),
+        ckpt,
         keys=["k"],
         order_cols=["ts"],
     )
     q.awaitTermination(120)
-    out = spark.read.parquet(target)
+    t = TxLogTable(target)
+    out = t.read(spark)
     assert out.count() == 100
     # keys 0-49 must hold version 2 (newer ts) even if v1's batch ran later
     assert out.filter("k < 50").filter("version <> 2").count() == 0
     assert out.filter("k >= 50").filter("version <> 1").count() == 0
+    assert [h["op"] for h in t.history()] == ["merge", "merge"]
+    merged_version = t.version()
 
     # catch-up rerun: checkpoint skips processed files, state unchanged
     q2 = stream_cdc_upsert(
-        spark, str(src), target, str(tmp_path / "cdc_ckpt"),
-        keys=["k"], order_cols=["ts"],
+        spark, str(src), target, ckpt, keys=["k"], order_cols=["ts"],
     )
     q2.awaitTermination(120)
-    assert spark.read.parquet(target).count() == 100
+    assert t.version() == merged_version
+
+    # checkpoint loss replays every batch: the txn log no-ops each one —
+    # NO new commits, not merely a convergent re-merge
+    shutil.rmtree(ckpt)
+    q3 = stream_cdc_upsert(
+        spark, str(src), target, ckpt, keys=["k"], order_cols=["ts"],
+    )
+    q3.awaitTermination(120)
+    assert t.version() == merged_version
+    assert t.read(spark).count() == 100
 
 
 def test_rocksdb_state_store_windowed_counts(spark, tmp_path, landing):
@@ -257,6 +272,7 @@ def test_stream_dedup_within_watermark(spark, tmp_path):
 
 def test_stream_quality_gate_splits_clean_and_quarantine(spark, tmp_path):
     from bigdataingestion_spark.pipeline.quality import Expectation
+    from bigdataingestion_spark.sinks.txlog import TxLogTable
     from bigdataingestion_spark.streaming.quality_gate import stream_quality_gate
 
     landing = tmp_path / "landing"
@@ -283,10 +299,11 @@ def test_stream_quality_gate_splits_clean_and_quarantine(spark, tmp_path):
         rules,
     )
     q.awaitTermination(120)
-    clean = spark.read.parquet(str(tmp_path / "lake"))
+    clean = TxLogTable(str(tmp_path / "lake")).read(spark)
     assert sorted(r["id"] for r in clean.collect()) == [1, 4]
-    dlq = {r["id"]: r["_violations"] for r in spark.read.parquet(
-        str(tmp_path / "dlq")).collect()}
+    assert "_violations" not in clean.columns
+    dlq = {r["id"]: r["_violations"] for r in TxLogTable(
+        str(tmp_path / "dlq")).read(spark).collect()}
     assert set(dlq) == {2, 3, 5}
     assert dlq[2] == "value_positive"
     assert dlq[3] == "name_not_null"
@@ -294,24 +311,41 @@ def test_stream_quality_gate_splits_clean_and_quarantine(spark, tmp_path):
 
 
 def test_gate_batch_replay_is_idempotent(spark, tmp_path):
-    """foreachBatch is at-least-once; replaying the same batch_id must not
-    duplicate rows in either sink (per-batch overwrite directories)."""
+    """foreachBatch is at-least-once. The gate's worst case is a crash
+    AFTER the lake append and BEFORE the quarantine append: the replayed
+    batch must no-op the lake (txn id already in its log) and commit the
+    quarantine — each sink exactly once."""
     from bigdataingestion_spark.pipeline.quality import Expectation
+    from bigdataingestion_spark.sinks.txlog import TxLogTable
     from bigdataingestion_spark.streaming.quality_gate import gate_batch
+
+    def rows(t):
+        return sorted(tuple(r) for r in t.read(spark).collect())
 
     df = spark.createDataFrame(
         [(1, 5.0), (2, -1.0), (3, 2.0)], ["id", "value"]
     )
     rules = [Expectation("value_positive", F.col("value") > 0)]
-    lake, dlq = str(tmp_path / "lake"), str(tmp_path / "dlq")
-    gate_batch(df, 0, lake, dlq, rules)
-    gate_batch(df, 0, lake, dlq, rules)  # replay after a simulated crash
-    assert spark.read.parquet(lake).count() == 2
-    assert spark.read.parquet(dlq).count() == 1
+    lake = TxLogTable(str(tmp_path / "lake"))
+    dlq = TxLogTable(str(tmp_path / "dlq"))
+
+    # simulate the crash: the lake half of batch 0 committed, then death
+    lake.append(df.filter("value > 0"), txn_id="scope:0")
+
+    # restart replays batch 0 through the real module-level batch fn
+    gate_batch(df, 0, lake, dlq, rules, scope="scope")
+    assert rows(lake) == [(1, 5.0), (3, 2.0)]  # not doubled
+    assert lake.version() == 0  # replay no-op, no second commit
+    assert rows(dlq) == [(2, -1.0, "value_positive")]
+
+    # full replay of batch 0 (both sides committed): both no-op
+    gate_batch(df, 0, lake, dlq, rules, scope="scope")
+    assert lake.version() == 0 and dlq.version() == 0
+
     # a NEW batch id still appends alongside
     df2 = spark.createDataFrame([(4, 7.0)], ["id", "value"])
-    gate_batch(df2, 1, lake, dlq, rules)
-    assert spark.read.parquet(lake).count() == 3
+    gate_batch(df2, 1, lake, dlq, rules, scope="scope")
+    assert rows(lake) == [(1, 5.0), (3, 2.0), (4, 7.0)]
 
 
 def test_stream_starts_on_empty_landing_zone_with_schema(spark, tmp_path):
@@ -357,11 +391,10 @@ def test_stream_cdc_upsert_crash_between_merge_and_checkpoint(
     spark, tmp_path, monkeypatch
 ):
     """Failure injection at the at-least-once hazard: the worker dies AFTER
-    a batch's merge rewrote the lake state but BEFORE the checkpoint
-    recorded the batch. The restart re-delivers that batch; the ordered
-    merge must absorb the replay (same keys, same versions -> same state),
-    never duplicate or regress keys."""
-    from bigdataingestion_spark.sinks import merge as merge_mod
+    a batch's merge committed but BEFORE the checkpoint recorded the
+    batch. The restart re-delivers that batch; its txn id is already in
+    the log, so the replay must no-op — never duplicate or regress keys."""
+    from bigdataingestion_spark.sinks.txlog import TxLogTable
     from bigdataingestion_spark.streaming.ingest import stream_cdc_upsert
 
     src = tmp_path / "cdc_src"
@@ -380,7 +413,7 @@ def test_stream_cdc_upsert_crash_between_merge_and_checkpoint(
     target = str(tmp_path / "cdc_state")
     ckpt = str(tmp_path / "cdc_ckpt")
 
-    real_merge = merge_mod.merge_upsert_ordered
+    real_merge = TxLogTable.merge_upsert
     crashed = []
 
     def crash_after_merge(*args, **kwargs):
@@ -390,7 +423,7 @@ def test_stream_cdc_upsert_crash_between_merge_and_checkpoint(
             raise RuntimeError("injected crash: merge landed, checkpoint not")
         return out
 
-    monkeypatch.setattr(merge_mod, "merge_upsert_ordered", crash_after_merge)
+    monkeypatch.setattr(TxLogTable, "merge_upsert", crash_after_merge)
     q = stream_cdc_upsert(
         spark, str(src), target, ckpt, keys=["k"], order_cols=["ts"]
     )
@@ -399,8 +432,9 @@ def test_stream_cdc_upsert_crash_between_merge_and_checkpoint(
         raise q.exception() or AssertionError("query did not fail")
     monkeypatch.undo()
 
-    # hazard is real: the first batch's merge IS on disk
-    assert crashed and spark.read.parquet(target).count() > 0
+    # hazard is real: the first batch's merge IS committed
+    t = TxLogTable(target)
+    assert crashed and t.read(spark).count() > 0
 
     # restart with the same checkpoint: crashed batch replays through the
     # merge, remaining batches apply once — state converges exactly
@@ -408,7 +442,9 @@ def test_stream_cdc_upsert_crash_between_merge_and_checkpoint(
         spark, str(src), target, ckpt, keys=["k"], order_cols=["ts"]
     )
     q2.awaitTermination(300)
-    out = spark.read.parquet(target)
+    out = t.read(spark)
     assert out.count() == 100  # one row per key, no replay duplicates
     assert out.filter("k < 50").filter("version <> 2").count() == 0
     assert out.filter("k >= 50").filter("version <> 1").count() == 0
+    # the replayed batch no-opped on its txn id: one commit per batch
+    assert [h["op"] for h in t.history()] == ["merge", "merge"]

@@ -1,7 +1,7 @@
-"""txlog-backed streaming sinks (round-6): CDC upsert as atomic
-merge commits and the dead-letter quality gate with txn-id exactly-once
-on both sides — the transactional upgrades of `stream_cdc_upsert` and
-`stream_quality_gate`."""
+"""txlog-backed streaming sinks: op-coded CDC apply as conditional-MERGE
+commits and streams that maintain incremental views through the
+``views=`` hook. The CDC upsert and dead-letter gate sinks are covered in
+`test_streaming.py`."""
 
 from __future__ import annotations
 
@@ -10,129 +10,6 @@ import shutil
 from pyspark.sql import functions as F
 
 from bigdataingestion_spark.sinks.txlog import TxLogTable
-
-
-def _rows(df):
-    return sorted(tuple(r) for r in df.collect())
-
-
-def test_stream_cdc_upsert_txlog_converges_and_replay_noops(spark, tmp_path):
-    from bigdataingestion_spark.streaming.ingest import stream_cdc_upsert_txlog
-
-    src = tmp_path / "src"
-    # version 2 lands FIRST, version 1 second; maxFilesPerTrigger=1 makes
-    # them separate out-of-order micro-batches
-    v2 = spark.range(50).select(
-        F.col("id").alias("k"),
-        F.lit(2).alias("version"),
-        F.expr("timestamp_micros(cast(1700000200000000 + id as long))").alias("ts"),
-    )
-    v1 = spark.range(100).select(
-        F.col("id").alias("k"),
-        F.lit(1).alias("version"),
-        F.expr("timestamp_micros(cast(1700000100000000 + id as long))").alias("ts"),
-    )
-    v2.coalesce(1).write.parquet(str(src))
-    v1.coalesce(1).write.mode("append").parquet(str(src))
-
-    target, ckpt = str(tmp_path / "state"), str(tmp_path / "ckpt")
-    q = stream_cdc_upsert_txlog(
-        spark, str(src), target, ckpt, keys=["k"], order_cols=["ts"]
-    )
-    assert q.awaitTermination(180)
-    t = TxLogTable(target)
-    out = t.read(spark)
-    assert out.count() == 100
-    assert out.filter("k < 50").filter("version <> 2").count() == 0
-    assert out.filter("k >= 50").filter("version <> 1").count() == 0
-    assert all(h["op"] == "merge" for h in t.history())
-    merged_version = t.version()
-
-    # checkpoint loss replays every batch: the txn log no-ops each one —
-    # NO new commits, not merely a convergent re-merge
-    shutil.rmtree(ckpt)
-    q2 = stream_cdc_upsert_txlog(
-        spark, str(src), target, ckpt, keys=["k"], order_cols=["ts"]
-    )
-    assert q2.awaitTermination(180)
-    assert t.version() == merged_version
-    assert t.read(spark).count() == 100
-
-
-def test_stream_quality_gate_txlog_routes_both_sides(spark, tmp_path):
-    from bigdataingestion_spark.pipeline.quality import Expectation
-    from bigdataingestion_spark.streaming.quality_gate import (
-        stream_quality_gate_txlog,
-    )
-
-    landing = tmp_path / "landing"
-    rows = [
-        (1, "ok", 10.0),
-        (2, "ok", -3.0),  # violates value_positive
-        (3, None, 5.0),   # violates name_not_null
-        (4, "ok", None),  # NULL predicate -> NOT a violation
-    ]
-    spark.createDataFrame(rows, ["id", "name", "value"]).coalesce(1).write.parquet(
-        str(landing)
-    )
-    rules = [
-        Expectation("value_positive", F.col("value") > 0),
-        Expectation("name_not_null", F.col("name").isNotNull()),
-    ]
-    lake, dlq = str(tmp_path / "lake"), str(tmp_path / "dlq")
-    q = stream_quality_gate_txlog(
-        spark, str(landing), lake, dlq, str(tmp_path / "ckpt"), rules
-    )
-    assert q.awaitTermination(180)
-    clean = TxLogTable(lake).read(spark)
-    assert sorted(r["id"] for r in clean.collect()) == [1, 4]
-    assert "_violations" not in clean.columns
-    bad = {
-        r["id"]: r["_violations"]
-        for r in TxLogTable(dlq).read(spark).collect()
-    }
-    assert bad == {2: "value_positive", 3: "name_not_null"}
-
-
-def test_gate_batch_txlog_crash_between_sinks_is_exactly_once(spark, tmp_path):
-    """The dead-letter gate's worst case: crash AFTER the lake append,
-    BEFORE the quarantine append. The replayed batch must no-op the lake
-    (txn id already in its log) and commit the quarantine — each sink
-    exactly once, no layout convention involved."""
-    from bigdataingestion_spark.pipeline.quality import Expectation
-    from bigdataingestion_spark.streaming.quality_gate import gate_batch_txlog
-
-    df = spark.createDataFrame(
-        [(1, 5.0), (2, -1.0), (3, 2.0)], ["id", "value"]
-    )
-    rules = [Expectation("value_positive", F.col("value") > 0)]
-    lake = TxLogTable(str(tmp_path / "lake"))
-    dlq = TxLogTable(str(tmp_path / "dlq"))
-
-    # simulate the crash: the lake half of batch 0 committed, then death
-    clean = df.filter("value > 0")
-    lake.append(clean, txn_id="scope:0")
-
-    # restart replays batch 0 through the real module-level batch fn
-    gate_batch_txlog(df, 0, lake, dlq, rules, scope="scope")
-    assert _rows(lake.read(spark)) == [(1, 5.0), (3, 2.0)]  # not doubled
-    assert lake.version() == 0  # replay no-op, no second commit
-    assert _rows(dlq.read(spark)) == [(2, -1.0, "value_positive")]
-
-    # full replay of batch 0 (both sides committed): both no-op
-    gate_batch_txlog(df, 0, lake, dlq, rules, scope="scope")
-    assert lake.version() == 0 and dlq.version() == 0
-
-    # a new batch appends alongside
-    gate_batch_txlog(
-        spark.createDataFrame([(4, 7.0)], ["id", "value"]),
-        1,
-        lake,
-        dlq,
-        rules,
-        scope="scope",
-    )
-    assert _rows(lake.read(spark)) == [(1, 5.0), (3, 2.0), (4, 7.0)]
 
 
 def test_stream_cdc_apply_ops_full_idu_lifecycle(spark, tmp_path):
