@@ -13,8 +13,9 @@ Reference semantics: the public Delta MERGE contract (first matching
 clause per row category; unmatched rows carry; a source row matching no
 insert clause is ignored; NULL conditions do not fire a clause). The
 reference repo reaches the same shapes through Spark-SQL ``MERGE INTO``
-on its state tables (ING:366-415); this generalizes the two fixed merge
-shapes of ``TxLogTable.merge_upsert`` to arbitrary clause lists.
+on its state tables (ING:366-415); this generalizes the fixed by-key
+shapes of ``TxLogTable.merge_upsert``/``delete_matching`` (one shared
+rewrite: source-wins, latest-wins, delete) to arbitrary clause lists.
 
 Expression scoping rules (documented on ``TxLogTable.merge``):
 

@@ -50,8 +50,11 @@ re-expressed minimally:
 - ``merge_upsert(source, keys[, order_cols])`` is copy-on-write MERGE:
   snapshot ∪ source resolved per key (source-wins, or latest-wins by
   ``order_cols`` for out-of-order deliveries), rewritten and swapped in one
-  commit. File-level pruning (rewriting only files whose key range
-  intersects the source) is the 100 TB refinement of the same design.
+  commit; ``delete_matching(source, keys)`` is the same rewrite with no
+  replacement rows. Both run ONE by-key body (``_rewrite_by_key``): key
+  bounds -> min/max stats -> bloom prune, one finding scan, rewrite of
+  only the touched files, one commit — at 100 TB a batch touching 0.1% of
+  the files rewrites 0.1% of the table.
 - ``read(spark, version=N)`` / ``read(spark, timestamp=T)`` time-travel
   (commits carry a wall-clock ``ts``); ``history()`` is the audit log;
   ``vacuum()`` deletes files unreachable from the latest version.
@@ -3547,6 +3550,7 @@ class TxLogTable:
         src: dict,
         keys: list[str],
         null_safe: bool,
+        files: list[str] | None = None,
     ) -> list[str]:
         """Data skipping for MERGE: drop files whose log-held key-column
         [min, max] cannot intersect the source's bounds (``src``, from
@@ -3556,11 +3560,12 @@ class TxLogTable:
         turns the finding pass from "scan every file" into "scan the
         files whose range the batch plausibly touches" (on a key-ordered
         or Z-ordered layout, a narrow CDC batch keeps O(batch-span)
-        files)."""
+        files). ``files`` narrows the judged set (default: every file
+        of ``snap``)."""
         p2l = self._p2l_of(snap.schema_json)
         return [
             f
-            for f in snap.files
+            for f in (snap.files if files is None else files)
             if not (
                 f in snap.file_stats
                 and _keys_disjoint(
@@ -3604,6 +3609,24 @@ class TxLogTable:
                 out[k] = v
         return out
 
+    @staticmethod
+    def _key_join(
+        df: DataFrame,
+        other: DataFrame,
+        keys: list[str],
+        null_safe: bool,
+        how: str = "leftsemi",
+    ) -> DataFrame:
+        """Semi/anti join of ``df`` against ``other`` on ``keys`` —
+        SQL equality, or NULL-matches-NULL when ``null_safe``."""
+        if not null_safe:
+            return df.join(other, on=keys, how=how)
+        cond = None
+        for k in keys:
+            c = df[k].eqNullSafe(other[k])
+            cond = c if cond is None else cond & c
+        return df.join(other, cond, how)
+
     def _files_with_matching_keys(
         self,
         spark: SparkSession,
@@ -3634,18 +3657,49 @@ class TxLogTable:
         df = self._read_files(
             spark, snap, list(scan_files), with_file_col=fc
         )
-        src_keys = source.select(*keys).distinct()
-        if null_safe:
-            cond = None
-            for k in keys:
-                c = df[k].eqNullSafe(src_keys[k])
-                cond = c if cond is None else cond & c
-            hit_df = df.join(src_keys, cond, "leftsemi")
-        else:
-            hit_df = df.join(src_keys, on=keys, how="leftsemi")
+        hit_df = self._key_join(
+            df, source.select(*keys).distinct(), keys, null_safe
+        )
         hits = hit_df.select(fc).distinct().collect()
         touched = {self._rel_from_uri(r[0]) for r in hits}
         return [f for f in snap.files if f in touched]
+
+    def _key_candidates(
+        self,
+        spark: SparkSession,
+        snap: Snapshot,
+        source: DataFrame,
+        keys: list[str],
+        null_safe: bool,
+        bounds: dict | None = None,
+        bloom: bool = True,
+    ) -> tuple[dict, list[str], int]:
+        """Files of ``snap`` that MAY hold a key of ``source`` — the
+        pruning prefix every by-key op shares: the source's key bounds
+        (one agg job, skipped when ``bounds`` is precomputed), log-held
+        min/max stats, then (unless ``bloom=False``) the per-file bloom
+        probe. Returns ``(bounds, candidates, files_bloom_skipped)``."""
+        if bounds is None:
+            bounds = self._source_key_bounds(source, keys)
+        cands = self._stats_candidates(snap, bounds, keys, null_safe)
+        if not bloom:
+            return bounds, cands, 0
+        kept = self._bloom_candidates(
+            spark, snap, source, keys, cands, bounds, null_safe
+        )
+        return bounds, kept, len(cands) - len(kept)
+
+    def _key_read_check(self, src_bounds: dict, keys: list[str], null_safe: bool):
+        """Commit-time read set of a by-key op — "every row whose key the
+        source carries": a winner-added file conflicts unless its
+        log-held key stats prove it disjoint from ``src_bounds``."""
+
+        def read_check(added: list[str], cur: Snapshot) -> list[str]:
+            return self._stats_candidates(
+                cur, src_bounds, keys, null_safe, files=added
+            )
+
+        return read_check
 
     def read_matching_candidates(
         self, spark: SparkSession, source: DataFrame, keys: list[str]
@@ -3665,10 +3719,8 @@ class TxLogTable:
                 else source.schema
             )
             return spark.createDataFrame([], schema)
-        bounds = self._source_key_bounds(source, keys)
-        cands = self._stats_candidates(snap, bounds, keys, null_safe=False)
-        cands = self._bloom_candidates(
-            spark, snap, source, keys, cands, bounds, null_safe=False
+        _, cands, _ = self._key_candidates(
+            spark, snap, source, keys, null_safe=False
         )
         if not cands:
             return self._read_snapshot(spark, snap).limit(0)
@@ -3683,34 +3735,22 @@ class TxLogTable:
         txn_id: str | None = None,
     ) -> int:
         """Copy-on-write MERGE INTO with FILE-LEVEL PRUNING: source-wins
-        upsert by ``keys``, or latest-wins by ``order_cols`` when
-        deliveries may be out of order, committed atomically. Works on
-        flat and hive-partitioned tables: rewritten rows re-stage into
-        their partition dirs and source rows land where their values
-        dictate, so a key whose partition value changed moves (its old
-        file is touched by the finding pass like any match). Only keys
-        present in the source are affected — like Delta's MERGE, this never dedups
-        pre-existing duplicate keys the source doesn't mention, in ANY
-        mode (a whole-table dedup side effect would also be
-        layout-dependent under pruning: duplicates split across
-        touched/untouched files would dedup partially).
-
-        Delta's MERGE cost shape: one finding scan locates the files that
-        contain keys present in the source; ONLY those files are merged
-        and rewritten, every other file carries into the new version by
-        reference, and pure inserts (no matching file) cost one new file.
-        A CDC micro-batch touching 0.1% of a 100 TB table rewrites 0.1%
-        of it — the pre-pruning implementation re-staged the entire
-        table per merge. Before the scan even starts, log-held per-file
-        key min/max stats (recorded at commit time from the parquet
-        footers, Delta's data-skipping stats) drop files whose key range
-        cannot intersect the source's — on a key-clustered layout the
-        finding pass then opens only the files a narrow batch plausibly
-        touches. Returns the committed version."""
+        upsert by ``keys`` (every target row of a source key is replaced
+        by the source's rows for it, duplicates included), or
+        latest-wins by ``order_cols`` when deliveries may be out of
+        order (one survivor per source key; NULL keys match
+        null-safely), committed atomically. Works on flat and
+        hive-partitioned tables: rewritten rows re-stage into their
+        partition dirs and source rows land where their values dictate,
+        so a key whose partition value changed moves (its old file is
+        touched by the finding pass like any match). Only keys present
+        in the source are affected — like Delta's MERGE, this never
+        dedups pre-existing duplicate keys the source doesn't mention,
+        in ANY mode. Cost shape, pruning and CDF classes:
+        :meth:`_rewrite_by_key`. Returns the committed version."""
         snap = self.snapshot()
         if txn_id is not None and snap and txn_id in snap.txn_ids:
             return snap.version
-        pcols = list(snap.partition_cols) if snap else []
         if snap is not None and _identity_of(
             StructType.fromJson(json.loads(snap.schema_json))
         ):
@@ -3736,130 +3776,153 @@ class TxLogTable:
         if ours:
             source = source.persist()
         cached = source  # unpersist target: _apply_generated rebinds
-        source = self._apply_generated(source, snap)
         try:
-            touched: list[str] = []
-            stat_skipped = 0
-            bloom_skipped = 0
-            # bounds are needed even when the BASE snapshot holds no stats:
-            # the commit-time conflict check judges files added by WINNING
-            # commits (which do carry stats) against the same bounds
-            src_bounds = self._source_key_bounds(source, keys)
-            if snap is None or not snap.files:
-                merged = (
-                    self._latest_wins(source, keys, order_cols)
-                    if order_cols
-                    else source
-                )
-            else:
-                candidates = self._stats_candidates(
-                    snap, src_bounds, keys, null_safe=bool(order_cols)
-                )
-                range_kept = len(candidates)
-                candidates = self._bloom_candidates(
-                    spark,
-                    snap,
-                    source,
-                    keys,
-                    candidates,
-                    src_bounds,
-                    null_safe=bool(order_cols),
-                )
-                bloom_skipped = range_kept - len(candidates)
-                stat_skipped = len(snap.files) - len(candidates)
-                touched = self._files_with_matching_keys(
-                    spark,
-                    snap,
-                    source,
-                    keys,
-                    null_safe=bool(order_cols),
-                    candidates=candidates,
-                )
-                hit_rows = (
-                    self._read_files(spark, snap, touched)
-                    if touched
-                    else self._read_snapshot(spark, snap).limit(0)
-                )
-                if order_cols:
-                    # MERGE affects ONLY keys the source carries (Delta
-                    # semantics — it never dedups the target as a side
-                    # effect). Touched-file rows whose key is NOT in the
-                    # source must be rewritten (their file is) but pass
-                    # through VERBATIM, outside the latest-wins window:
-                    # funneling them through it would make the result
-                    # depend on which files the finding pass happened to
-                    # touch (duplicates split across touched/untouched
-                    # files would dedup partially — layout-dependent).
-                    skeys = source.select(*keys).distinct()
-                    cond = None
-                    for k in keys:
-                        c = hit_rows[k].eqNullSafe(skeys[k])
-                        cond = c if cond is None else cond & c
-                    matching = hit_rows.join(skeys, cond, "leftsemi")
-                    passthrough = hit_rows.join(skeys, cond, "leftanti")
-                    merged = self._latest_wins(
-                        matching.unionByName(source, allowMissingColumns=True),
-                        keys,
-                        order_cols,
-                    ).unionByName(passthrough, allowMissingColumns=True)
-                else:
-                    survivors = hit_rows.join(
-                        source.select(keys), on=keys, how="left_anti"
-                    )
-                    merged = survivors.unionByName(
-                        source, allowMissingColumns=True
-                    )
-            # only the incoming rows need checking: every surviving target
-            # row was validated by the commit that wrote it
+            source = self._apply_generated(source, snap)
+            # only the incoming rows need checking: every surviving
+            # target row was validated by the commit that wrote it
             self._check_constraints(source, snap.constraints if snap else ())
             schema = self._next_schema(snap, source, merge_schema=True)
-            cdf_map = None
-            if self._cdf_enabled(snap):
-                cdf_map = self._merge_cdf(
-                    source,
-                    keys,
-                    order_cols,
-                    hit_rows if (snap is not None and snap.files) else None,
-                    merged,
-                )
-            files, fstats = self._stage_files(
-                merged, pcols or None, write_schema=schema
+            return self._rewrite_by_key(
+                spark, snap, source, keys, source, order_cols, schema,
+                "merge", txn_id,
             )
         finally:
             if ours:
                 cached.unpersist()
 
-        def read_check(added: list[str], cur: Snapshot) -> list[str]:
-            # the merge's read set is "every row whose key the source
-            # carries": a winner-added file conflicts unless its log-held
-            # key stats prove it disjoint from the source's key bounds
-            p2l = self._p2l_of(cur.schema_json)
-            return [
-                f
-                for f in added
-                if not (
-                    f in cur.file_stats
-                    and _keys_disjoint(
-                        src_bounds,
-                        self._stats_logical(cur.file_stats[f], p2l),
-                        keys,
-                        bool(order_cols),
-                    )
-                )
-            ]
+    def _rewrite_by_key(
+        self,
+        spark: SparkSession,
+        snap: Snapshot | None,
+        source: DataFrame,
+        keys: list[str],
+        rows: DataFrame | None,
+        order_cols: list[str] | None,
+        schema: StructType,
+        op: str,
+        txn_id: str | None,
+        metrics: dict | None = None,
+    ) -> int:
+        """The one copy-on-write by-key rewrite behind :meth:`merge_upsert`
+        and :meth:`delete_matching`. ``source`` carries the key set;
+        ``rows`` replaces every target row of those keys (source-wins),
+        or competes with them for the single latest row per key when
+        ``order_cols`` is given (latest-wins: NULL keys match
+        null-safely, since the dedup window groups them); ``rows=None``
+        deletes the keys (SQL equality: NULL keys never match).
 
+        Delta's MERGE cost shape: source key bounds, log-held per-file
+        min/max stats and the bloom probe drop files that cannot hold a
+        source key; ONE finding scan over the survivors locates the
+        files that do; only those are rewritten, everything else carries
+        into the new version by reference, and pure inserts cost one new
+        file. A CDC batch touching 0.1% of a 100 TB table rewrites 0.1%
+        of it. Touched-file rows of keys the source does NOT carry pass
+        through verbatim, outside the latest-wins window: funneling them
+        through it would dedup pre-existing duplicates only where the
+        finding pass happened to look (layout-dependent results).
+
+        CDF, one rule for every mode: a removed row whose key is
+        replaced is ``update_preimage`` and its replacement
+        ``update_postimage``; a removed row with no replacement is a
+        ``delete``; a replacement for a key the target did not hold is
+        an ``insert``. In latest-wins mode a key whose source row LOST
+        the ordering shows identical pre/post images. A delete no file
+        matches commits nothing; everything else is one commit whose
+        read set is the source's key bounds."""
+        null_safe = bool(order_cols)
+        pcols = list(snap.partition_cols) if snap else []
+        # bounds are needed even when the BASE snapshot holds no files:
+        # the commit-time conflict check judges files added by WINNING
+        # commits (which do carry stats) against the same bounds
+        src_bounds = self._source_key_bounds(source, keys)
+        touched: list[str] = []
+        stat_skipped = bloom_skipped = 0
+        hit = None
+        if snap is not None and snap.files:
+            _, cands, bloom_skipped = self._key_candidates(
+                spark, snap, source, keys, null_safe, bounds=src_bounds
+            )
+            stat_skipped = len(snap.files) - len(cands)
+            touched = self._files_with_matching_keys(
+                spark, snap, source, keys, null_safe, candidates=cands
+            )
+            if rows is None and not touched:
+                return snap.version
+            hit = (
+                self._read_files(spark, snap, touched)
+                if touched
+                else self._read_snapshot(spark, snap).limit(0)
+            )
+        cdf_on = self._cdf_enabled(snap)
+        if cdf_on and rows is None:
+            hit = hit.persist()  # read twice: the kept rows and the deletes
+        try:
+            new = rows
+            if hit is None:  # empty table: the resolved rows are the table
+                if order_cols:
+                    new = self._latest_wins(rows, keys, order_cols)
+                out = new
+            else:
+                skeys = source.select(*keys).distinct()
+                removed = self._key_join(hit, skeys, keys, null_safe)
+                # source-wins anti-joins the replacement rows' raw key
+                # column, latest-wins and delete the distinct key set; the
+                # Spark job counts of these plan shapes are pinned in
+                # tests/test_merge_sources.py
+                drop = (
+                    skeys if rows is None or order_cols else rows.select(*keys)
+                )
+                out = self._key_join(hit, drop, keys, null_safe, "leftanti")
+                if order_cols:
+                    new = self._latest_wins(
+                        removed.unionByName(rows, allowMissingColumns=True),
+                        keys,
+                        order_cols,
+                    )
+                if new is not None:
+                    out = out.unionByName(new, allowMissingColumns=True)
+            cdf_map = None
+            if cdf_on:
+                if hit is None:
+                    changes = {"insert": new}
+                elif new is None:
+                    changes = {"delete": removed}
+                else:
+                    hkeys = hit.select(*keys).distinct()
+                    changes = {
+                        "update_preimage": removed,
+                        "update_postimage": self._key_join(
+                            new, hkeys, keys, null_safe
+                        ),
+                        "insert": self._key_join(
+                            new, hkeys, keys, null_safe, "leftanti"
+                        ),
+                    }
+                cdf_map = {
+                    name: paths
+                    for name, df in changes.items()
+                    if (paths := self._stage_cdf(df))
+                } or None
+            files, fstats = self._stage_files(
+                out, pcols or None, write_schema=schema
+            )
+        finally:
+            if cdf_on and rows is None:
+                hit.unpersist()
         v = self._commit_reconciled(
             files,
             touched,
             schema,
-            "merge",
+            op,
             txn_id,
             snap,
             partition_cols=pcols or None,
-            read_check=read_check,
+            read_check=self._key_read_check(src_bounds, keys, null_safe),
             precomputed_stats=fstats,
             cdf=cdf_map,
             metrics={
+                **(metrics or {}),
                 "files_rewritten": len(touched),
                 "files_carried": (len(snap.files) - len(touched)) if snap else 0,
                 "files_stat_skipped": stat_skipped,
@@ -3868,60 +3931,6 @@ class TxLogTable:
         )
         self._maybe_auto_compact(spark)
         return v
-
-    def _merge_cdf(
-        self,
-        source: DataFrame,
-        keys: list[str],
-        order_cols: list[str] | None,
-        hit_rows: DataFrame | None,
-        merged: DataFrame,
-    ) -> dict | None:
-        """Materialize MERGE change rows (Delta CDF's merge classes):
-        matched target rows as ``update_preimage``, their resolved new
-        state as ``update_postimage``, source rows for previously-absent
-        keys as ``insert``. In latest-wins mode a matched key whose
-        source row LOST the ordering appears with identical pre/post
-        images (the merge made no logical change to it — documented)."""
-        if hit_rows is None:  # empty table: everything the merge wrote
-            paths = self._stage_cdf(merged)  # is an insert
-            return {"insert": paths} if paths else None
-        null_safe = bool(order_cols)
-        skeys = source.select(*keys).distinct()
-        hkeys = hit_rows.select(*keys).distinct()
-
-        def _join(df, other, anti=False):
-            how = "leftanti" if anti else "leftsemi"
-            if null_safe:
-                cond = None
-                for k in keys:
-                    c = df[k].eqNullSafe(other[k])
-                    cond = c if cond is None else cond & c
-                return df.join(other, cond, how)
-            return df.join(other, on=keys, how=how)
-
-        pre = _join(hit_rows, skeys)
-        if order_cols:
-            winners = self._latest_wins(
-                pre.unionByName(source, allowMissingColumns=True),
-                keys,
-                order_cols,
-            )
-            post = _join(winners, hkeys)
-            ins = _join(winners, hkeys, anti=True)
-        else:
-            post = _join(source, hkeys)
-            ins = _join(source, hkeys, anti=True)
-        out = {}
-        for name, df in (
-            ("update_preimage", pre),
-            ("update_postimage", post),
-            ("insert", ins),
-        ):
-            paths = self._stage_cdf(df)
-            if paths:
-                out[name] = paths
-        return out or None
 
     def merge(
         self,
@@ -4082,13 +4091,9 @@ class TxLogTable:
         session_tz = spark.conf.get("spark.sql.session.timeZone")
         try:
             # ---- candidate files: keys ∪ by-source predicates ----------
-            src_bounds = (
-                source_key_bounds
-                if source_key_bounds is not None
-                else self._source_key_bounds(source, keys)
-            )
-            key_cands = self._stats_candidates(
-                snap, src_bounds, keys, null_safe=False
+            src_bounds, key_cands, _ = self._key_candidates(
+                spark, snap, source, keys, null_safe=False,
+                bounds=source_key_bounds, bloom=False,
             )
             bysrc_cands: set[str] = set()
             for cond in plan.by_source_predicates():
@@ -4378,23 +4383,12 @@ class TxLogTable:
             if cond is not None
         ]
 
+        key_check = self._key_read_check(src_bounds, keys, null_safe=False)
+
         def read_check(added: list[str], cur: Snapshot) -> list[str]:
             if uncond_bysrc:
                 return list(added)  # read set is the whole table
-            p2l = self._p2l_of(cur.schema_json)
-            bad = {
-                f
-                for f in added
-                if not (
-                    f in cur.file_stats
-                    and _keys_disjoint(
-                        src_bounds,
-                        self._stats_logical(cur.file_stats[f], p2l),
-                        keys,
-                        False,
-                    )
-                )
-            }
+            bad = set(key_check(added, cur))
             for chk in pred_checks:
                 rest = [f for f in added if f not in bad]
                 bad |= set(chk(rest, cur))
@@ -4451,101 +4445,29 @@ class TxLogTable:
         """DELETE WHERE (keys) IN (SELECT keys FROM source) — the
         key-set twin of :meth:`merge_upsert` and the missing half of a
         CDC apply (a replicated DELETE arrives as a key batch, not a SQL
-        predicate). Same cost shape as MERGE: data-skipping stats drop
-        files whose key range cannot intersect the source's, one finding
-        scan locates the files that DO hold matching keys, only those
-        are rewritten without the matching rows, everything else carries
-        by reference. NULL keys never match (SQL IN semantics). No
-        matching files -> no-op without a commit. CDF materializes the
-        removed rows when enabled."""
+        predicate). Same pruned copy-on-write rewrite as MERGE
+        (:meth:`_rewrite_by_key`), on flat and hive-partitioned tables:
+        only files holding a matching key are rewritten without it,
+        everything else carries by reference. NULL keys never match (SQL
+        IN semantics). No matching files -> no-op without a commit. CDF
+        materializes the removed rows when enabled."""
         snap = self.snapshot()
         if txn_id is not None and snap and txn_id in snap.txn_ids:
             return snap.version
-        self._require_flat(snap)
         if snap is None or not snap.files:
             return snap.version if snap else -1
         ours = not source.storageLevel.useMemory and not source.storageLevel.useDisk
         if ours:
             source = source.persist()
         try:
-            src_bounds = self._source_key_bounds(source, keys)
-            candidates = self._stats_candidates(
-                snap, src_bounds, keys, null_safe=False
+            return self._rewrite_by_key(
+                spark, snap, source, keys, None, None,
+                StructType.fromJson(json.loads(snap.schema_json)),
+                "delete", txn_id, metrics={"keys": list(keys)},
             )
-            range_kept = len(candidates)
-            candidates = self._bloom_candidates(
-                spark, snap, source, keys, candidates, src_bounds,
-                null_safe=False,
-            )
-            bloom_skipped = range_kept - len(candidates)
-            stat_skipped = len(snap.files) - len(candidates)
-            touched = self._files_with_matching_keys(
-                spark, snap, source, keys, null_safe=False,
-                candidates=candidates,
-            )
-            if not touched:
-                return snap.version
-            base = self._read_files(spark, snap, touched)
-            cdf_on = self._cdf_enabled(snap)
-            if cdf_on:
-                base = base.persist()
-            try:
-                cdf_map = None
-                if cdf_on:
-                    removed = base.join(
-                        source.select(*keys).distinct(), on=keys, how="leftsemi"
-                    )
-                    cdf_map = {"delete": self._stage_cdf(removed)}
-                keep = base.join(
-                    source.select(*keys).distinct(), on=keys, how="left_anti"
-                )
-                files, fstats = self._stage_files(
-                    keep,
-                    write_schema=StructType.fromJson(
-                        json.loads(snap.schema_json)
-                    ),
-                )
-            finally:
-                if cdf_on:
-                    base.unpersist()
         finally:
             if ours:
                 source.unpersist()
-
-        def read_check(added: list[str], cur: Snapshot) -> list[str]:
-            p2l = self._p2l_of(cur.schema_json)
-            return [
-                f
-                for f in added
-                if not (
-                    f in cur.file_stats
-                    and _keys_disjoint(
-                        src_bounds,
-                        self._stats_logical(cur.file_stats[f], p2l),
-                        keys,
-                        False,
-                    )
-                )
-            ]
-
-        return self._commit_reconciled(
-            files,
-            touched,
-            StructType.fromJson(json.loads(snap.schema_json)),
-            "delete",
-            txn_id,
-            snap,
-            read_check=read_check,
-            precomputed_stats=fstats,
-            cdf=cdf_map,
-            metrics={
-                "keys": list(keys),
-                "files_rewritten": len(touched),
-                "files_carried": len(snap.files) - len(touched),
-                "files_stat_skipped": stat_skipped,
-                "files_bloom_skipped": bloom_skipped,
-            },
-        )
 
     def _rel_from_uri(self, uri: str) -> str:
         """Normalize an ``input_file_name()`` URI to a root-relative name
@@ -4746,11 +4668,11 @@ class TxLogTable:
     # filters are built at commit time from the staged files (one extra
     # executor-side pass over the new files only), stored as sidecar
     # ``bloom-<uuid>.json`` blobs referenced from the file's stats entry,
-    # and consulted by merge_upsert/delete_matching BEFORE the finding
-    # scan. Hashing is Kirsch-Mitzenmacher double hashing over Spark's
-    # xxhash64 (JVM-side, stable across sessions); false positives only
-    # cost a wasted scan — never a wrong skip (the absence proof is
-    # exact for the hashed value set). Sizing below.
+    # and consulted by the by-key rewrite (merge_upsert, delete_matching)
+    # BEFORE the finding scan. Hashing is Kirsch-Mitzenmacher double
+    # hashing over Spark's xxhash64 (JVM-side, stable across sessions);
+    # false positives only cost a wasted scan — never a wrong skip (the
+    # absence proof is exact for the hashed value set). Sizing below.
 
     # Sizing is driven by BATCH probing, not point lookups: a K-key batch
     # falsely keeps a disjoint file with probability 1-(1-p)^K, so the

@@ -471,7 +471,8 @@ def stream_cdc_apply_ops(
 
     — the canonical CDC-apply shape ``stream_cdc_upsert`` cannot
     express (its latest-wins merge has no delete path; tombstones there
-    need a second ``delete_matching`` commit, losing batch atomicity).
+    need a second by-key rewrite, ``delete_matching``, in its own
+    commit, losing batch atomicity).
     SET */INSERT * map only source∩table columns, so the op column
     never lands in the table; a tombstone for an already-absent key is
     ignored (the insert clause's condition); and a redelivered batch is
@@ -651,7 +652,8 @@ def stream_cdf_replicate(
     versions, and applying v5's delete before v4's insert of the same
     key would resurrect it). Within a version, four steps:
 
-    1. feed ``delete`` rows remove by key (``delete_matching``) —
+    1. feed ``delete`` rows remove by key (``delete_matching``: the
+       table's by-key rewrite with no replacement rows) —
        BEFORE the upserts, because an overwrite commit synthesizes
        delete(old)+insert(new) of possibly-overlapping keys in ONE
        version;
@@ -659,7 +661,8 @@ def stream_cdf_replicate(
        version's postimage/insert key set — are removed too: a source
        UPDATE may legally rewrite a KEY column, and skipping its
        preimage would orphan the old key on the replica forever;
-    3. ``update_postimage`` rows upsert via ``merge_upsert``;
+    3. ``update_postimage`` rows upsert via ``merge_upsert`` (the same
+       by-key rewrite, latest-wins by ``order_cols``);
     4. ``insert`` rows APPEND (not upsert): an insert's key was absent
        (merge inserts, overwrite after its deletes) or the source
        legitimately holds duplicate keys (plain appends never merge) —

@@ -1,7 +1,7 @@
 """Model-based property test for the txlog table format: an arbitrary
 sequence of append / overwrite / source-wins-merge / latest-wins-merge /
-compact / delete / update / restore / replace_where / column-mapping
-operations must leave the table equal to a plain-Python model of the same
+key-set delete / compact / delete / update / restore / replace_where /
+column-mapping operations must leave the table equal to a plain-Python model of the same
 semantics, and every intermediate version must remain time-travelable to
 exactly the rows the model held at that point. Hypothesis drives the op
 sequence; Spark jobs are tiny, so examples are capped for runtime."""
@@ -22,7 +22,9 @@ _row = st.tuples(
 )
 _op = st.one_of(
     st.tuples(
-        st.sampled_from(["append", "overwrite", "merge", "merge_latest", "compact"]),
+        st.sampled_from(
+            ["append", "overwrite", "merge", "merge_latest", "delete_keys", "compact"]
+        ),
         st.lists(_row, min_size=1, max_size=4),
     ),
     # row-level DML / restore / property flip / column mapping: payload
@@ -67,6 +69,9 @@ def _apply_model(model: list, op: str, rows: list) -> list:
     if op == "merge":  # source wins: drop ALL target rows for source keys
         skeys = {r[0] for r in rows}
         return [r for r in model if r[0] not in skeys] + rows
+    if op == "delete_keys":  # key-set delete: the merge with no replacement
+        keys = {r[0] for r in rows}
+        return [r for r in model if r[0] not in keys]
     # merge_latest: MERGE touches ONLY keys the source carries — one
     # survivor per source key, greatest ord among target+source copies;
     # rows of other keys (even pre-existing duplicates) are untouched.
@@ -209,10 +214,14 @@ def test_txlog_matches_model_at_every_version(spark, tmp_path_factory, ops):
             version = t.overwrite(df)
         elif op == "merge":
             version = t.merge_upsert(spark, df, keys=["k"])
+        elif op == "delete_keys":
+            if t.version() < 0:
+                continue  # DML on a never-written table: nothing to do
+            version = t.delete_matching(spark, df.select("k"), keys=["k"])
         else:
             version = t.merge_upsert(spark, df, keys=["k"], order_cols=["ord"])
         if (
-            op in ("merge", "merge_latest")
+            op in ("merge", "merge_latest", "delete_keys")
             and not cdf_on
             and _commit_rewrites(t, version)
         ):
